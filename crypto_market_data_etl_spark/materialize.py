@@ -137,37 +137,8 @@ def checkpoint_nostats(
     return _strip_plan_stats(ck)
 
 
-def _capture_plan(df: DataFrame) -> None:
-    """When ``SPARK_GRAFT_PLAN_CAPTURE_DIR`` is set, dump the INPUT plan of
-    every materialize() call there (numbered, formatted explain).
-
-    Why: a checkpoint/persist truncates lineage, so a downstream
-    ``explain()`` shows ``Scan ExistingRDD`` where the expensive subtree
-    used to be — the r15 plan dumps could not evidence the in-row MinHash
-    signature rewrite because the signature stage hid behind materialize()
-    (VERDICT r15 "what's wrong #1"). The plan-dump tool sets the env var;
-    bench/driver runs never do, so this is a no-op there (one getenv)."""
-    cap_dir = os.environ.get("SPARK_GRAFT_PLAN_CAPTURE_DIR")
-    if not cap_dir:
-        return
-    try:
-        import io
-        from contextlib import redirect_stdout
-
-        os.makedirs(cap_dir, exist_ok=True)
-        n = len(os.listdir(cap_dir))
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        with open(os.path.join(cap_dir, f"materialize_{n:02d}.txt"), "w") as fh:
-            fh.write(buf.getvalue())
-    except Exception:  # pragma: no cover - capture must never break queries
-        logger.warning("materialize plan capture failed", exc_info=True)
-
-
 def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     """Materialize a multiply-referenced subtree (see module docstring)."""
-    _capture_plan(df)
     mode = os.environ.get("SPARK_GRAFT_MATERIALIZE")
     if mode not in ("localCheckpoint", "persist"):
         master = ""

@@ -451,6 +451,15 @@ def _signature_sweep(
                 # after drop_null(); float32 → float64 widening is exact,
                 # so this equals the expression tier's cast("double")
                 flat = np.asarray(vec.drop_null().flatten(), dtype=np.float64)
+                n_valid = int((~na).sum())
+                if flat.size != n_valid * dim:
+                    # a ragged batch can still divide evenly by dim (two
+                    # length-32 vectors at dim 64), and reshape would then
+                    # silently merge rows into one signature
+                    raise ValueError(
+                        f"_signature_sweep: {n_valid} non-NULL vectors hold "
+                        f"{flat.size} elements, expected {n_valid} x dim={dim}"
+                    )
                 V = flat.reshape(-1, dim)
                 dots = _sweep_cross(V, P_mat)
                 bits = (dots > 0) | np.isnan(dots)
@@ -639,7 +648,6 @@ def _rerank_candidates(
     vec_col: str,
     k: int,
     q_vecs: DataFrame | None = None,
-    arrow: bool | None = None,
 ) -> DataFrame:
     """Exact cosine rerank of a distinct (q_id, n_id) candidate set.
 
@@ -652,28 +660,11 @@ def _rerank_candidates(
     result; found by tools/scale_ann_run.py's offset-id planted queries).
     Defaults to ``vecs`` for the self-join ANN form.
 
-    ``arrow`` (default OFF; ``SPARK_GRAFT_RERANK_ARROW=1`` flips the
-    default) swaps the per-pair JVM ``_dot`` fold for a ``mapInArrow``
-    :func:`_sweep_rows` kernel — the bit-exact FP-sequence replication from
-    the r15 sweep tiers, so every emitted sim is identical (pytest-pinned).
-
-    NOTE (r16, measured NEGATIVE at every probed shape — the tier stays
-    OFF; do not flip without new evidence): interleaved noop A/Bs via
-    tools/rerank_probe_r16.py show the kernel 1.5× slower at 200k pairs
-    (dim 64), 2.1× at 2M pairs, 2.6× at 500k pairs dim 256. Root cause:
-    the rerank is ROW-PAIRED — bytes crossing the Arrow boundary scale
-    with the work (2×dim doubles per pair), unlike the x05/x32 sweep
-    tiers whose n×k cross kernels move n+k vectors for n×k dots — and the
-    warm whole-stage-codegen fold already does ~17 ns/element, so there
-    is no arithmetic-intensity leverage for a copy to buy back. The arm
-    is kept (with its parity pytest) as the measured record. Whole-NULL
-    vectors route around the kernel with a NULL raw sim (expression-tier
-    parity); zero norms raise (DIVIDE_BY_ZERO loudness parity).
+    NOTE: a ``mapInArrow`` pair kernel for this fold read 1.5-2.6x slower
+    at every probed shape (arm removed after c57bcf6): the rerank is
+    row-paired, so Arrow bytes grow with the work (2 x dim doubles per
+    pair) while the codegen fold already runs at ~17 ns/element.
     """
-    import os as _os
-
-    if arrow is None:
-        arrow = _os.environ.get("SPARK_GRAFT_RERANK_ARROW", "") == "1"
     q_vecs = vecs if q_vecs is None else q_vecs
     # norms ride the vector projections (one fold per vector) instead of
     # being re-folded per candidate pair — bit-identical, k-fold less work
@@ -687,60 +678,6 @@ def _rerank_candidates(
     )
     joined = cand.join(q, "q_id").join(n, "n_id")
     w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
-    if arrow:
-        from pyspark.sql import types as T
-
-        raw_schema = T.StructType(
-            [
-                joined.schema["q_id"],
-                joined.schema["n_id"],
-                T.StructField("__raw", T.DoubleType()),
-            ]
-        )
-        both = F.col("q_vec").isNotNull() & F.col("c_vec").isNotNull()
-        src = joined.filter(both).select(
-            "q_id", "n_id",
-            F.col("q_vec").cast("array<double>").alias("q_vec"),
-            F.col("c_vec").cast("array<double>").alias("c_vec"),
-            "__qn", "__cn",
-        )
-
-        def _pair_batches(it):
-            import numpy as np
-            import pyarrow as pa
-
-            for b in it:
-                rows = b.num_rows
-                if rows == 0:
-                    continue
-                Q = np.asarray(b.column(2).flatten(), dtype=np.float64).reshape(rows, -1)
-                C = np.asarray(b.column(3).flatten(), dtype=np.float64).reshape(rows, -1)
-                qn = np.asarray(b.column(4), dtype=np.float64)
-                cn = np.asarray(b.column(5), dtype=np.float64)
-                den = qn * cn
-                if (den == 0.0).any():
-                    # loudness parity with the expression tier's ANSI divide
-                    raise ArithmeticError(
-                        "_rerank_candidates: zero-norm vector in candidate "
-                        "pair (DIVIDE_BY_ZERO parity with the ANSI divide)"
-                    )
-                raw = _sweep_rows(Q, C) / den
-                yield pa.RecordBatch.from_arrays(
-                    [b.column(0), b.column(1), pa.array(raw, type=pa.float64())],
-                    names=["q_id", "n_id", "__raw"],
-                )
-
-        scored = src.mapInArrow(_pair_batches, schema=raw_schema).unionByName(
-            joined.filter(~both).select(
-                "q_id", "n_id", F.lit(None).cast("double").alias("__raw")
-            )
-        )
-        return (
-            scored.withColumn("sim", F.round(F.col("__raw"), 6))
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("q_id", "n_id", "rnk", "sim")
-        )
     sim = _dot(F.col("q_vec"), F.col("c_vec")) / (F.col("__qn") * F.col("__cn"))
     return (
         joined.withColumn("sim", F.round(sim, 6))
@@ -2079,154 +2016,10 @@ PQ_TRAIN_PROBE_CAP = 1_000_000
 RESIDUAL_LUT_CAP_DOUBLES = 25_000_000
 
 
-def opq_rotation_train(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    m: int = 8,
-    dim: int = 64,
-    center_vec: list[float] | None = None,
-):
-    """Train an OPQ-lite orthogonal rotation (Ge et al., "Optimized Product
-    Quantization", CVPR 2013 / TPAMI 2014 — the parametric 'eigenvalue
-    allocation' initialization, OPQ-P): returns a ``(dim, dim)`` numpy
-    orthogonal matrix ``R`` whose columns are the corpus PCA eigenvectors
-    PERMUTED so each of the ``m`` PQ blocks receives (near-)equal total
-    variance. Rotating vectors by ``x' = xR`` before PQ balances the
-    quantization error across sub-codebooks — on anisotropic corpora
-    (hashed-BoW text: a few dominant shared directions) the contiguous
-    slices PQ takes otherwise give some blocks all the variance and others
-    none, wasting half the code bits.
-
-    Distributed part: ONE corpus pass computes the exact second-moment
-    matrix (per-Arrow-batch ``V.T @ V`` partials + count/sum — a
-    ``dim x dim`` result, map-side, no shuffle of vectors). Driver part:
-    eigendecomposition of the ``dim x dim`` covariance + a greedy
-    allocation of eigen-directions to blocks balancing the log-variance
-    product (largest eigenvalue to the emptiest block; Ge et al. §IV-B).
-    Cost at 100 TB: one map-side pass and a 64x64 eigh — train it on the
-    same sample the PQ codebooks use and reuse ``R``.
-
-    Because cosine/L2 are rotation-invariant, applying ``R`` to the WHOLE
-    pipeline (corpus + queries, via :func:`rotate_vectors`) leaves exact
-    brute-force results unchanged (pytest-asserted) while every
-    downstream PQ/IVFADC stage — cells, residuals, codebooks — trains in
-    the rotated space. ``center_vec`` computes the covariance of the
-    centered-and-normalized assignment-space vectors (match the
-    pipeline's centering) without materializing them.
-    """
-    import numpy as np
-
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    mean_np = None if center_vec is None else np.asarray(center_vec, dtype=np.float64)
-
-    def partials(it):
-        n_acc = 0.0
-        s_acc = np.zeros(dim, dtype=np.float64)
-        ss_acc = np.zeros((dim, dim), dtype=np.float64)
-        for pdf in it:
-            if pdf.empty:
-                continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            if mean_np is not None:
-                V = V - mean_np[None, :]
-            V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-            n_acc += float(len(V))
-            s_acc += V.sum(axis=0)
-            ss_acc += V.T @ V
-        if n_acc:
-            yield pd.DataFrame(
-                {
-                    "n": [n_acc],
-                    "s": [s_acc.tolist()],
-                    "ss": [ss_acc.reshape(-1).tolist()],
-                }
-            )
-
-    part = df.select(vec_col).mapInPandas(
-        partials, schema="n double, s array<double>, ss array<double>"
-    )
-    # reduce the partials on the driver: ONE row per non-empty PARTITION
-    # (the iterator accumulates across its Arrow batches), each dim +
-    # dim^2 doubles — collected rows are bounded by partition count, not
-    # corpus size, so collect + numpy-sum is exact and driver memory stays
-    # flat at 100 TB. The collect avoids a dim^2-expression Catalyst agg —
-    # 4096 `sum(ss[i])` projections put analysis/codegen, not data, on the
-    # critical path (measured ~490 s at 400k x 64-dim for an agg whose
-    # input was ~200 rows; the collect form is seconds)
-    rows = part.collect()
-    if not rows or sum(r["n"] for r in rows) < 2:
-        raise ValueError("opq_rotation_train: need at least 2 non-NULL vectors")
-    n = float(sum(r["n"] for r in rows))
-    S = np.sum([np.asarray(r["s"], dtype=np.float64) for r in rows], axis=0)
-    SS = np.sum([np.asarray(r["ss"], dtype=np.float64) for r in rows], axis=0)
-    mu = S / n
-    cov = SS.reshape(dim, dim) / n - np.outer(mu, mu)
-    evals, evecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(-evals)
-    evals, evecs = evals[order], evecs[:, order]
-
-    # eigenvalue allocation, ROUND-based: each round deals one eigen-
-    # direction per block, the largest remaining eigenvalue to the block
-    # with the smallest accumulated log-variance product. (The naive
-    # "min-product among non-full blocks" greedy from the paper's prose
-    # breaks when eigenvalues are < 1 — unit-norm vectors guarantee that —
-    # because adding any eigenvalue LOWERS a block's product below the
-    # empty blocks' 1.0, so one block swallows the whole spectrum top
-    # until full; rounds keep block fills equal so the comparison is
-    # always like-for-like.)
-    dsub = dim // m
-    blocks: list[list[int]] = [[] for _ in range(m)]
-    logprod = np.zeros(m)
-    i = 0
-    for _ in range(dsub):
-        for b in sorted(range(m), key=lambda j: (logprod[j], j)):
-            blocks[b].append(i)
-            logprod[b] += float(np.log(max(evals[i], 1e-18)))
-            i += 1
-    perm = [i for blk in blocks for i in blk]
-    return np.ascontiguousarray(evecs[:, perm])  # (dim, dim), orthogonal
-
-
-def rotate_vectors(
-    df: DataFrame,
-    rotation,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Apply an orthogonal rotation to a vector column: ``x' = xR`` (one
-    broadcast matmul per Arrow batch, map-side, no shuffle). NULL vectors
-    pass through as NULL. Schema is preserved — downstream operators see
-    the same ``(id, vec)`` contract."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    R = np.asarray(rotation, dtype=np.float64)
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(vec_col, T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def batches(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            mask = pdf[vec_col].notna()
-            out = [None] * len(pdf)
-            if mask.any():
-                V = np.array(pdf.loc[mask, vec_col].tolist(), dtype=np.float64)
-                W = V @ R
-                rows = list(W)
-                j = 0
-                for i, ok in enumerate(mask.to_numpy()):
-                    if ok:
-                        out[i] = rows[j]
-                        j += 1
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), vec_col: out})
-
-    return df.select(id_col, vec_col).mapInPandas(batches, schema=schema)
+# NOTE: an OPQ-lite rotation (Ge et al. 2013 eigenvalue allocation) before
+# PQ moved 400k hashed-BoW m8 recall by -2 to +1 pts (SCALE_r11/r12; code
+# removed after c57bcf6): centering + normalizing already isotropizes the
+# variance, so code capacity (m16), not rotation, moves recall.
 
 
 def pq_train(
@@ -3109,7 +2902,6 @@ def ivfpq_topk_fused(
     rerank_queries: DataFrame | None = None,
     residual: bool = False,
     adc_dtype: str = "float64",
-    merge: str = "arrays",
 ) -> DataFrame:
     """:func:`ivfpq_topk` with the ADC scan re-plumbed for wall clock —
     same probe selection, same LUTs, same shortlist/rerank semantics
@@ -3193,11 +2985,6 @@ def ivfpq_topk_fused(
     """
     import numpy as np
     from pyspark.sql import types as T
-
-    if merge not in ("arrays", "window"):
-        # a typo like "windows" would silently select the arrays path and
-        # invalidate any A/B that believed it was timing the window arm
-        raise ValueError(f"merge must be 'arrays' or 'window', got {merge!r}")
 
     books, m = _pq_codebook_tensor(codebooks)
     if any(b.shape[0] > 256 for b in books):
@@ -3369,9 +3156,6 @@ def ivfpq_topk_fused(
                 np.concatenate(acc_q), np.concatenate(acc_n),
                 np.concatenate(acc_d), shortlist,
             )
-            if merge == "window":
-                yield pd.DataFrame({"q_id": qa, "n_id": na, "dist": da})
-                return
             # _prune's lexsort leaves qa grouped — emit ONE array row
             # per (partition, query): ≤ nq rows of ≤ shortlist-long
             # arrays per partition instead of nq × shortlist candidate
@@ -3389,33 +3173,10 @@ def ivfpq_topk_fused(
                 }
             )
 
-    if merge == "window":
-        # the pre-r14 physical form, kept for interleaved A/Bs: emit
-        # per-partition top-shortlist ROWS into a global ranking window
-        # (the self-pair mask inside `batches` applies to both forms, so
-        # window/arrays stay bit-identical)
-        row_schema = T.StructType(
-            [
-                T.StructField("q_id", T.LongType()),
-                T.StructField("n_id", T.LongType()),
-                T.StructField("dist", T.DoubleType()),
-            ]
-        )
-        partial = packed.mapInPandas(batches, schema=row_schema)
-        w = Window.partitionBy("q_id").orderBy(
-            F.col("dist").asc(), F.col("n_id")
-        )
-        cand = (
-            partial.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= shortlist)
-            .select("q_id", "n_id")
-            .distinct()
-        )
-        return _rerank_candidates(
-            cand, corpus, id_col, vec_col, k,
-            q_vecs=queries if rerank_queries is None else rerank_queries,
-        )
-
+    # NOTE: emitting per-partition top-shortlist ROWS into a global
+    # row_number window ran at wall parity with this array fold at 12.8M
+    # (arrays/window 1.005-1.139x, SCALE_r14; arm removed after c57bcf6)
+    # but shuffles O(queries x partitions x shortlist) rows, so it lost.
     partial = packed.mapInPandas(batches, schema=schema)
 
     def _merge(pdf):

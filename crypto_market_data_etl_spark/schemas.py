@@ -143,14 +143,20 @@ def events_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet footer (one cheap batch-metadata read) instead of hardcoding, so
     the ``ts`` physical type (TIMESTAMP(NANOS) nanos-as-long vs
     TIMESTAMP(MICROS)) is whatever the file actually has.
+
+    ``events.parquet`` may be one file or a Spark-written directory of part
+    files (what ``df.write.parquet`` produces); the batch read's file
+    listing tells the two apart on any filesystem.
     """
     tune(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    return normalize_events_ts(
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")  # file source needs a dir
-        .parquet(sf_dir)
-    )
+    path = f"{sf_dir}/events.parquet"
+    batch = spark.read.parquet(path)
+    reader = spark.readStream.schema(batch.schema)
+    if any(not f.endswith("/events.parquet") for f in batch.inputFiles()):
+        src = reader.parquet(path)
+    else:  # a single file: the file source needs a dir, so filter its parent
+        src = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
+    return normalize_events_ts(src)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -292,40 +292,6 @@ def test_sign_lsh_family_sweep_null_vector_parity(spark, embs):
         assert sorted(map(tuple, sweep)) == sorted(map(tuple, expr)), name
 
 
-def test_rerank_arrow_tier_bit_parity(spark, embs, monkeypatch):
-    """r16 (VERDICT r15 #6): the env-gated Arrow rerank tier — _sweep_rows
-    over candidate pairs instead of the per-pair JVM fold — must emit the
-    IDENTICAL full output (ids, ranks, 6dp sims) across the ANN family,
-    including whole-NULL vectors (NULL sim routes around the kernel). It is
-    default-off (the x13 lesson: both vectors cross the Arrow boundary, a
-    loss at fixture pair counts; tools/rerank_probe_r16.py holds the
-    probe-scale evidence for when to flip it)."""
-    from crypto_market_data_etl_spark.operators.similarity import (
-        lsh_ann_multiprobe,
-        lsh_ann_bandor,
-    )
-
-    nul = spark.createDataFrame(
-        [(900001, None, 0)], "vec_id long, embedding array<float>, label int"
-    )
-    dfn = embs.unionByName(nul)
-    qs = dfn.filter((F.col("vec_id") % 25 == 0) | F.col("embedding").isNull())
-    # x13 (lsh_ann_topk) computes its sims inline, not via
-    # _rerank_candidates — the knob intentionally does not reach it
-    cases = [
-        ("x17", lambda: lsh_ann_multiprobe(dfn, qs, n_planes=6, k=3)),
-        ("x18", lambda: lsh_ann_bandor(
-            dfn, qs, planes_per_table=4, n_tables=3, k=3)),
-    ]
-    for name, fn in cases:
-        monkeypatch.setenv("SPARK_GRAFT_RERANK_ARROW", "1")
-        arrow = fn().collect()
-        monkeypatch.delenv("SPARK_GRAFT_RERANK_ARROW")
-        expr = fn().collect()
-        assert len(arrow) > 0, name
-        assert sorted(map(tuple, arrow)) == sorted(map(tuple, expr)), name
-
-
 def test_signature_sweep_id_exactness_past_2_53(spark):
     """r16 (ADVICE r15): the sweep must not corrupt ids > 2^53 when a NULL
     id shares the batch. The old mapInPandas form let Arrow widen
@@ -364,6 +330,21 @@ def test_signature_sweep_id_exactness_past_2_53(spark):
         ).collect()
     }
     assert cv[big] == [0.25] * 8 and cv[2] is None
+
+
+def test_signature_sweep_rejects_ragged_vectors(spark):
+    """Two length-32 vectors at dim=64 hold 64 elements in total, so a bare
+    reshape would merge them into one signature row; the sweep must raise
+    a ValueError instead of emitting wrong buckets."""
+    from pyspark.errors import PythonException
+
+    from crypto_market_data_etl_spark.operators.similarity import _signature_sweep
+
+    df = spark.createDataFrame(
+        [(1, [1.0] * 32), (2, [-1.0] * 32)], "vec_id long, embedding array<double>"
+    ).coalesce(1)  # one Arrow batch holds both rows
+    with pytest.raises(PythonException, match="ValueError: _signature_sweep"):
+        _signature_sweep(df, "vec_id", "embedding", 4, 64).collect()
 
 
 def test_numpy_signatures_match_expression_tier(spark, embs):
@@ -759,72 +740,6 @@ def test_pq_train_seed_edge_cases(spark):
         pq_train(df, m=m, k=kc, n_iters=1, dim=dim, seed_mod=3).collect()
     finally:
         sim.PQ_TRAIN_PROBE_CAP = old
-
-
-def test_opq_rotation_orthogonal_invariant_and_balanced(spark):
-    """OPQ-lite rotation invariants: (1) R is orthogonal; (2) brute cosine
-    top-k is IDENTICAL on rotated corpus+queries (rotation invariance — the
-    whole-pipeline-rotation trick is exact); (3) eigenvalue allocation
-    balances per-block variance on an anisotropic corpus where contiguous
-    slices are maximally unbalanced; (4) deterministic; (5) NULL vectors
-    pass through rotate_vectors as NULL."""
-    import numpy as np
-
-    from crypto_market_data_etl_spark.operators.similarity import (
-        cosine_topk_np,
-        opq_rotation_train,
-        rotate_vectors,
-    )
-
-    rng = np.random.default_rng(11)
-    dim, m, n = 8, 2, 300
-    # anisotropic: dims 0..3 get 10x the stddev of dims 4..7, so the
-    # contiguous split (block0 = dims 0-3) holds ~100x block1's variance
-    scales = np.array([10.0, 8.0, 6.0, 5.0, 1.0, 0.8, 0.6, 0.5])
-    X = rng.normal(size=(n, dim)) * scales
-    df = spark.createDataFrame(
-        [(i, [float(v) for v in X[i]]) for i in range(n)],
-        "vec_id long, embedding array<double>",
-    )
-    R = opq_rotation_train(df, m=m, dim=dim)
-    assert np.allclose(R @ R.T, np.eye(dim), atol=1e-9)  # (1)
-    R2 = opq_rotation_train(df, m=m, dim=dim)
-    assert np.allclose(R, R2)  # (4)
-
-    # (3): block variances balanced vs the contiguous split
-    Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    W = Xn @ R
-    dsub = dim // m
-    var_rot = [W[:, b * dsub:(b + 1) * dsub].var(axis=0).sum() for b in range(m)]
-    var_raw = [Xn[:, b * dsub:(b + 1) * dsub].var(axis=0).sum() for b in range(m)]
-    assert max(var_rot) / min(var_rot) < max(var_raw) / min(var_raw) / 3
-
-    # (2): exact top-k unchanged under whole-pipeline rotation
-    qX = rng.normal(size=(5, dim)) * scales
-    qdf = spark.createDataFrame(
-        [(1000 + i, [float(v) for v in qX[i]]) for i in range(5)],
-        "vec_id long, embedding array<double>",
-    )
-    def topk_sets(corpus_df, q_df):
-        out: dict[int, set] = {}
-        for r in cosine_topk_np(corpus_df, q_df, k=3).collect():
-            out.setdefault(r["q_id"], set()).add(r["n_id"])
-        return out
-
-    assert topk_sets(df, qdf) == topk_sets(
-        rotate_vectors(df, R), rotate_vectors(qdf, R)
-    )
-
-    # (5): NULL passthrough
-    nulls = spark.createDataFrame(
-        [(1, [1.0] * dim), (2, None)], "vec_id long, embedding array<double>"
-    )
-    out = {r.vec_id: r.embedding for r in rotate_vectors(nulls, R).collect()}
-    assert out[2] is None and out[1] is not None
-
-    # dim % m guard
-    with pytest.raises(ValueError, match="divisible"):
-        opq_rotation_train(df, m=3, dim=dim)
 
 
 def test_pq_encode_decode_and_adc(spark):
@@ -2823,11 +2738,6 @@ def test_ivfpq_topk_fused_equals_reference(spark):
         f32 = sorted(map(key, ivfpq_topk_fused(
             idx, qs, cents, books, df, adc_dtype="float32", **kw).collect()))
         assert f32 == ref, (m, residual, assign_r)
-        # the pre-r14 window merge is kept as a physical A/B arm — both
-        # merge strategies must stay bit-identical to the reference
-        win = sorted(map(key, ivfpq_topk_fused(
-            idx, qs, cents, books, df, merge="window", **kw).collect()))
-        assert win == ref, (m, residual, assign_r)
         if m == 4 and residual and assign_r == 1:
             bat = sorted(map(key, ivfpq_topk_batched(
                 idx, qs, cents, books, df, batch_rows=2, fused=True, **kw
@@ -3043,15 +2953,6 @@ def test_fused_self_join_divergence_regime(spark):
         "self-join tight-shortlist regime no longer diverges — the "
         "documented ivfpq_topk/fused semantics changed"
     )
-    # merge= is validated at entry: a typo like "windows" must raise, not
-    # silently select the arrays path (would invalidate an A/B run)
-    import pytest
-
-    with pytest.raises(ValueError, match="merge"):
-        ivfpq_topk_fused(
-            idx, self_qs, cents, books, df, n_probe=1, k=3, merge="windows"
-        )
-
 
 def test_ivfpq_multi_assignment(spark):
     """Multi-assignment (assign_r=2) invariants: (1) the index lists every

@@ -7,11 +7,15 @@ for two rounds). These tests make that drift loud:
 - the gate registry must stay within the cap, with oracle keys aligned;
 - variant queries must not shadow gate slots;
 - once a CORRECTNESS file produced from the CURRENT registry exists, every
-  registered query must have an all-green row in it.
+  registered query must have an all-green row in it;
+- the package reads exactly the known environment variables, so a new
+  env-gated code path is a visible, reviewed change.
 """
 
 import glob
 import json
+import re
+from pathlib import Path
 
 import pytest
 
@@ -87,3 +91,28 @@ def test_every_gated_query_has_green_gate_row():
         if not (r.get("rows_match") and r.get("schema_match") and r.get("hash_match"))
     }
     assert not red, f"non-green gate rows in {latest}: {sorted(red)}"
+
+
+#: every environment variable the package may read: two deployment settings
+#: and the materialize-mode override tests use to reach the persist path
+ENV_KNOBS = {"SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEMORY", "SPARK_GRAFT_MATERIALIZE"}
+
+
+def test_env_knob_census():
+    pkg = Path(plans.__file__).resolve().parent.parent
+    access = re.compile(r"\benviron\s*[.\[]|\bgetenv\s*\(")
+    named = re.compile(
+        r"\b(?:environ\.get|environ|getenv)\s*[\(\[]\s*[\"']([A-Za-z0-9_]+)[\"']"
+    )
+    found, unnamed = set(), []
+    for path in sorted(pkg.rglob("*.py")):
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if not access.search(line):
+                continue
+            names = named.findall(line)
+            if names:
+                found.update(names)
+            else:
+                unnamed.append(f"{path.relative_to(pkg)}:{i}: {line.strip()}")
+    assert not unnamed, unnamed  # every read must name its variable literally
+    assert found == ENV_KNOBS, found ^ ENV_KNOBS

@@ -18,6 +18,7 @@ from crypto_market_data_etl_spark.streaming.stateful import (
     stateful_dollar_bars,
     stateful_ewma,
 )
+from tests.conftest import SF_SMOKE
 
 SCHEMA = T.StructType(
     [
@@ -400,6 +401,28 @@ def test_stateful_dollar_bars_passthrough_ohlc_matches_batch(spark, tmp_path):
         for r in dollar_bars(batch_df, ["code"], "ts_us", "value", 10.0).collect()
     }
     assert streamed_bars == batch_bars and len(streamed_bars) >= 2
+
+
+def test_q30_streams_a_spark_written_events_directory(spark, tmp_path):
+    """q30 over ``events.parquet`` written by Spark as a DIRECTORY of part
+    files equals q30 over the single-file form: the stream source must read
+    the directory's part files, not filter its parent for a file named
+    events.parquet (which matched nothing and left q30 with no batch)."""
+    from crypto_market_data_etl_spark.plans import core
+    from crypto_market_data_etl_spark.session import tune
+
+    tune(spark)
+    sf_dir = tmp_path / "sf"
+    raw = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
+    raw.repartition(3).write.parquet(str(sf_dir / "events.parquet"))
+    assert (sf_dir / "events.parquet").is_dir()
+
+    def rows(d):
+        return sorted(map(tuple, core.q30_stream_dollar_bars(spark, d).collect()))
+
+    from_file = rows(SF_SMOKE)
+    assert len(from_file) > 0
+    assert rows(str(sf_dir)) == from_file
 
 
 def test_stream_stream_join(spark, tmp_path):

@@ -19,8 +19,8 @@ of sizes and writes one committed JSON artifact:
 - bpe batching rung (tools/scale_bpe_run.py): same merge budget at
   merges_per_pass 1/8/32 — driver passes and wall must drop ~m x.
 - ANN ladder (tools/scale_ann_run.py): warm-denominator recall-vs-cost
-  sweeps with scan-bytes columns — 400k BoW m8 anchor + the r11 m16/OPQ
-  isolation rungs, 1.6M BoW, 6.4M clustered scan-law, 6.4M BoW m8 anchor
+  sweeps with scan-bytes columns — 400k BoW m8 anchor + the r11 m16
+  isolation rung, 1.6M BoW, 6.4M clustered scan-law, 6.4M BoW m8 anchor
   + m16 deep-probe champion; rungs whose code paths are unchanged since
   r10 carry "inherited" pointers instead of re-burning the budget.
 - connected-components, stateful key-cardinality, retrieval max-score,
@@ -197,7 +197,7 @@ def main() -> None:
                 ann["jobs"][d.pop("job")] = d
     # the 100k sweep trio (uniform / clustered / bow) is code-path-stable
     # since r8 and re-measured through r10; r11's round budget goes to the
-    # new levers (m16, OPQ, deep probes) and the >=1.6M rungs instead
+    # new levers (m16, deep probes) and the >=1.6M rungs instead
     ann["sweep"] = ann["sweep_clustered"] = ann["sweep_bow"] = {
         "inherited": "unchanged code path — see SCALE_r10.json for the "
         "committed 100k uniform/clustered/bow sweeps"
@@ -210,7 +210,7 @@ def main() -> None:
         "note": (
             "--bow --vectors 400000 --cells 632 --assign-r 2 --tiers "
             "crivfpq — the m8 residual-IVFADC anchor at 400k (same-session "
-            "baseline for the r11 m16/OPQ lever comparisons; the full "
+            "baseline for the r11 m16 lever comparison; the full "
             "pq/cpq/civfpq family ladder is unchanged since r10 — see "
             "SCALE_r10.json sweep_bow_400k). Cost protocol: every ratio is "
             "cost_vs_brute_warm (interleaved minimum denominator), and "
@@ -233,9 +233,8 @@ def main() -> None:
     # the >=1.6M rungs (round-10 verdict #1): the scale where index
     # artifacts genuinely pay against a WARM brute denominator — BoW
     # (hostile: shared stop-word mass) and clustered (production regime)
-    # round-11 code-capacity levers at 400k (verdict #3): m16 codebooks
-    # (double code bytes, halve per-block quantization error) and the
-    # OPQ-lite rotation (Ge et al. 2013 eigenvalue allocation) — measured
+    # round-11 code-capacity lever at 400k (verdict #3): m16 codebooks
+    # (double code bytes, halve per-block quantization error) — measured
     # in isolation at 400k before committing the 6.4M champion config
     ann["sweep_bow_400k_m16"] = {
         "note": (
@@ -258,27 +257,6 @@ def main() -> None:
             d = json.loads(line)
             if "job" in d:
                 ann["sweep_bow_400k_m16"]["jobs"][d.pop("job")] = d
-    ann["sweep_bow_400k_opq"] = {
-        "note": (
-            "--bow --vectors 400000 --cells 632 --assign-r 2 --opq "
-            "--tiers crivfpq2_m8 — the rotation lever in isolation: "
-            "OPQ-lite eigenvalue-balanced rotation before the identical "
-            "m8 pipeline (brute is rotation-invariant, so recall deltas "
-            "are pure codebook-quality effects)"
-        ),
-        "jobs": {},
-    }
-    stdout = run([
-        sys.executable, "tools/scale_ann_run.py", "--sweep",
-        "--vectors", "400000", "--queries", "200", "--bow",
-        "--cells", "632", "--assign-r", "2", "--opq",
-        "--tiers", "crivfpq2_m8",
-    ])
-    for line in stdout.splitlines():
-        if line.strip().startswith("{"):
-            d = json.loads(line)
-            if "job" in d:
-                ann["sweep_bow_400k_opq"]["jobs"][d.pop("job")] = d
     ann["sweep_bow_1m6"] = {
         "note": (
             "--bow --vectors 1600000 --cells 1265 --assign-r 2 --tiers "

@@ -171,15 +171,6 @@ def main() -> None:
         "the smaller-N interleaves",
     )
     ap.add_argument(
-        "--opq",
-        action="store_true",
-        help="train an OPQ-lite rotation (PCA + eigenvalue-balanced block "
-        "allocation, Ge et al. CVPR 2013) on the centered corpus and "
-        "rotate corpus+queries BEFORE the pipeline — exact for brute "
-        "(rotation-invariant), re-balances variance across PQ blocks for "
-        "every downstream codebook. Tier names gain an 'opq_' prefix.",
-    )
-    ap.add_argument(
         "--bow",
         action="store_true",
         help="vectors = hashed_bow_embeddings of the Zipf corpus "
@@ -219,33 +210,6 @@ def main() -> None:
             .localCheckpoint()
         )
         queries.count()
-
-    if args.opq:
-        # whole-pipeline rotation: exact for brute (cosine is rotation-
-        # invariant; pytest-asserted), variance-balanced blocks for every
-        # downstream PQ. Trained on the centered-normalized space (where
-        # the residual codebooks live), applied to the raw vectors once.
-        from crypto_market_data_etl_spark.operators.similarity import (
-            embedding_mean as _emean,
-            opq_rotation_train,
-            rotate_vectors,
-        )
-
-        t0 = time.time()
-        _rot = opq_rotation_train(
-            corpus, m=args.m, dim=DIM, center_vec=_emean(corpus)
-        )
-        corpus = rotate_vectors(corpus, _rot).repartition(32).localCheckpoint()
-        corpus.count()
-        queries = rotate_vectors(queries, _rot).localCheckpoint()
-        queries.count()
-        print(
-            json.dumps(
-                {"job": "opq_rotation_build", "sec": round(time.time() - t0, 2),
-                 "m": args.m}
-            ),
-            flush=True,
-        )
 
     if args.sweep:
         _sweep(spark, corpus, queries, args)
