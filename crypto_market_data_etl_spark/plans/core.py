@@ -1022,12 +1022,13 @@ def q25_continuous_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q26 per-row running EWMA (U1/W4, the reference's actual intent: an EWMA
 # column on EVERY row — kafka_upbit_realtime_processing.py:99-104 applies its
 # GROUPED_AGG pandas UDF over rowsBetween(unboundedPreceding, currentRow)).
-# Engine side: ewma_full (one applyInPandas pass per key, exact full
-# history). Oracle: the same recurrence folded over a trailing-30 window
-# list (list_reduce seeds at the window's oldest row); with alpha=0.8 the
-# truncated history contributes < beta^30 ~ 1e-21 relative — far below the
-# 6dp round — and the fold performs the same fp update as pandas' ewm
-# (adjust=False), verified 0/5000 bit-mismatches in tests.
+# Engine side: ewma_full (native closed form over window functions, exact
+# full history to ~2*eps*max|x|/alpha). Oracle: the same recurrence folded
+# over a trailing-30 window list (list_reduce seeds at the window's oldest
+# row); with alpha=0.8 the truncated history contributes < beta^30 ~ 1e-21
+# relative — far below the 6dp round — and the fold performs the same fp
+# update as pandas' ewm (adjust=False), verified 0/5000 bit-mismatches in
+# tests.
 # --------------------------------------------------------------------------
 
 def q26_ewma_per_row(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -78,8 +78,11 @@ def market_stats_job(
     """§3.1 realtime path intent: per-snapshot OBI EWMA + OFI (batch form).
 
     The reference attempted these as window functions on a stream (rejected
-    by Spark — SURVEY caveats); batch form uses exact per-key recurrences,
-    streaming form is ``streaming.stateful.stateful_ewma``.
+    by Spark — SURVEY caveats) and computed the EWMA with a GROUPED_AGG
+    pandas UDF; the batch form here runs both recurrences as built-in
+    window functions (``with_ofi``'s lag, ``ewma_full``'s closed form) over
+    one shuffle by ``code``, so it starts no Python worker. The streaming
+    form is ``streaming.stateful.stateful_ewma``.
 
     ``block_span`` (``None`` | span in ms | ``"auto"``) switches both
     recurrences to their skew-proof blocked forms (``blocked_lag`` /

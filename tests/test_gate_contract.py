@@ -9,7 +9,9 @@ for two rounds). These tests make that drift loud:
 - once a CORRECTNESS file produced from the CURRENT registry exists, every
   registered query must have an all-green row in it;
 - the package reads exactly the known environment variables, so a new
-  env-gated code path is a visible, reviewed change.
+  env-gated code path is a visible, reviewed change;
+- the market batch jobs plan no operator that hands rows to a Python
+  worker, so a UDF slipping back into that path is a visible change.
 """
 
 import glob
@@ -116,3 +118,35 @@ def test_env_knob_census():
                 unnamed.append(f"{path.relative_to(pkg)}:{i}: {line.strip()}")
     assert not unnamed, unnamed  # every read must name its variable literally
     assert found == ENV_KNOBS, found ^ ENV_KNOBS
+
+
+#: physical operators that ship rows to a Python worker (pandas/Arrow UDFs,
+#: grouped maps, Python UDTFs)
+PYTHON_RUNNER = re.compile(r"\w*(?:InPandas|InArrow|EvalPython|WindowPython|PythonUDTF)\w*")
+
+
+def test_market_batch_jobs_start_no_python_worker(spark):
+    from crypto_market_data_etl_spark.plans.reference_jobs import (
+        candle_job,
+        market_stats_job,
+        parse_orderbooks,
+        parse_trades,
+        preprocess_job,
+    )
+    from tests.test_reference_jobs import _as_kafka, gen_orderbooks, gen_trades
+
+    trades = parse_trades(_as_kafka(spark, gen_trades()))
+    obs = parse_orderbooks(_as_kafka(spark, gen_orderbooks()))
+    jobs = {
+        "parse_trades": trades,
+        "parse_orderbooks": obs,
+        "preprocess_job": preprocess_job(trades, obs, block_span="auto", adaptive_asof="auto"),
+        "market_stats_job": market_stats_job(obs),
+        "candle_job": candle_job(trades),
+    }
+    found = {}
+    for name, df in jobs.items():
+        df.collect()  # the executed (final adaptive) plan, not just the logical one
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        found[name] = sorted(set(PYTHON_RUNNER.findall(plan)))
+    assert not any(found.values()), found

@@ -295,6 +295,37 @@ def test_ewma_blocked_auto_small_falls_back(spark):
     assert got == full
 
 
+def test_ewma_null_or_nan_value_fails_each_form(spark):
+    # a 400-row key whose NULL (or NaN) opens a time block: a NaN carry would
+    # poison every later row of the key, so both forms must fail loudly
+    for bad in (None, float("nan")):
+        vals = [float(i % 7) for i in range(400)]
+        vals[100] = bad
+        df = spark.createDataFrame(
+            [(1, i * 10, v) for i, v in enumerate(vals)], "key int, ts long, value double"
+        )
+        for fn, kw in ((ewma_full, {}), (ewma_blocked, {"block_span": 1000})):
+            msg = f"{fn.__name__}: NULL or NaN in value column 'value'"
+            with pytest.raises(Exception, match=msg):
+                fn(df, ["key"], ["ts"], "value", **kw).collect()
+
+
+def test_ewma_alpha_checked_at_call(spark):
+    df = spark.createDataFrame(_skewed_series(seed=15, n=300))
+    for alpha in (0.0, -0.1, 1.5, float("nan")):
+        with pytest.raises(ValueError, match="alpha"):
+            ewma_full(df, ["key"], ["ts", "seq"], "value", alpha=alpha)
+        with pytest.raises(ValueError, match="alpha"):
+            ewma_blocked(df, ["key"], ["ts", "seq"], "value", alpha=alpha, block_span=500)
+    # alpha=1 forgets all history: every row's EWMA is its own value, exactly
+    for got in (
+        ewma_full(df, ["key"], ["ts", "seq"], "value", alpha=1.0),
+        ewma_blocked(df, ["key"], ["ts", "seq"], "value", alpha=1.0, block_span=500),
+    ):
+        rows = got.collect()
+        assert len(rows) == 300 and all(r.ewma == r.value for r in rows)
+
+
 def test_with_ofi_blocked_matches_plain(spark):
     rng = np.random.default_rng(14)
     n = 2_000

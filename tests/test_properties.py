@@ -1,14 +1,16 @@
 """Property-based tests (hypothesis): the as-of join variants agree with each
 other and with brute force on arbitrary inputs; dollar bars partition trades
-exactly."""
+exactly; the closed-form EWMA tracks pandas' recurrence."""
 
 
+import numpy as np
 import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from crypto_market_data_etl_spark.operators.asof import asof_join, asof_join_adaptive
 from crypto_market_data_etl_spark.operators.bars import dollar_bars
+from crypto_market_data_etl_spark.operators.ewma import ewma_full
 
 # one shared strategy: small integer domains force collisions (ties, empty
 # bands, single-key data, duplicate timestamps)
@@ -254,3 +256,32 @@ def test_kmeans_parallel_init_invariants(spark, vecs, k, rounds):
     assert sorted((r.c_id, tuple(r.c_vec)) for r in got) == sorted(
         (r.c_id, tuple(r.c_vec)) for r in again
     )
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    alpha=st.floats(0.005, 1.0),
+    n=st.integers(1, 4000),
+    n_keys=st.integers(1, 3),
+    seed=st.integers(0, 2**32 - 1),
+)
+def test_ewma_full_matches_pandas_ewm(spark, alpha, n, n_keys, seed):
+    # signed lognormal(sigma=3) values span ~10 decades; the closed form's
+    # error is bounded by max|x|/alpha, not by each row's own magnitude
+    rng = np.random.default_rng(seed)
+    pdf = pd.DataFrame(
+        {
+            "key": rng.integers(0, n_keys, n),
+            "ts": rng.permutation(n),
+            "value": rng.choice([-1.0, 1.0], n) * rng.lognormal(0.0, 3.0, n),
+        }
+    )
+    got = ewma_full(
+        spark.createDataFrame(pdf), ["key"], ["ts"], "value", alpha=alpha
+    ).toPandas()
+    assert len(got) == n
+    for _, g in got.groupby("key"):
+        g = g.sort_values("ts")
+        expected = g["value"].ewm(alpha=alpha, adjust=False).mean().to_numpy()
+        bound = 16 * 2.0**-52 * np.abs(g["value"]).max() / alpha
+        assert np.abs(g["ewma"].to_numpy() - expected).max() <= bound, (alpha, len(g))
